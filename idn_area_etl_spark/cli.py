@@ -8,6 +8,10 @@ compatibility but meaningless (executor parallelism is the default in
 Spark).  Validation rules and the zero-rows exit-1 contract follow
 cli.py:56-74, 198-201.
 
+Page chunks are only read one at a time; the chunk size sets how soon
+an interrupt takes effect, not what is written.  Extraction, and with
+it first-seen province dedup, runs once over every chunk read.
+
 Because this container ships no camelot/pypdf, ``--fixture-json``
 accepts a JSON file of ``[[page_no, table_no, grid], ...]`` and runs
 the identical dataflow from fabricated tables — the same substitution
@@ -24,7 +28,10 @@ import signal
 import sys
 import time
 from collections.abc import Iterator, Sequence
+from functools import reduce
 from pathlib import Path
+
+from pyspark.sql import DataFrame
 
 from idn_area_etl_spark.config import ConfigError, load_config
 from idn_area_etl_spark.operators.registry import extract_all
@@ -44,7 +51,8 @@ PACKAGE_NAME = "idn-area-etl-spark"
 
 #: Graceful-shutdown state (reference cli.py:26-37): SIGINT flips the
 #: flag; the chunk loop finishes the CURRENT chunk, then stops pulling
-#: new chunks, flushes what was extracted, and reports partial counts.
+#: new chunks, extracts and flushes what was read, and reports partial
+#: counts.
 MAIN_PID = os.getpid()
 interrupted = False
 
@@ -77,8 +85,8 @@ def version_string() -> str:
 
 def chunked(seq: Sequence[int], size: int) -> Iterator[list[int]]:
     """Reference ``chunked`` (utils.py) — fixed-size page chunks."""
-    for i in range(0, len(seq), max(1, size)):
-        yield list(seq[i : i + max(1, size)])
+    for i in range(0, len(seq), size):
+        yield list(seq[i : i + size])
 
 
 def format_duration(duration: float) -> str:
@@ -97,6 +105,8 @@ def validate_args(args: argparse.Namespace) -> str | None:
     message or None."""
     if args.fixture_json is None and not str(args.pdf_path).endswith(".pdf"):
         return "input must be a .pdf file"
+    if args.chunk_size < 1:
+        return f"chunk size must be at least 1: {args.chunk_size}"
     if args.pages is not None and not validate_page_range(args.pages):
         return f"invalid page range: {args.pages!r}"
     if args.output is not None and not OUTPUT_NAME_PATTERN.match(args.output):
@@ -132,14 +142,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-v", "--version", action="store_true",
                    help="show the package version and exit")
     return p
-
-
-def _union_entities(
-    acc: dict | None, new: dict
-) -> dict:
-    if acc is None:
-        return dict(new)
-    return {k: acc[k].unionByName(new[k]) for k in acc}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -179,21 +181,18 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="idnareaetl-spark")
     try:
         # The reference's chunk loop (cli.py:170-195): page chunks are
-        # processed one at a time; a SIGINT finishes the CURRENT chunk,
-        # skips the rest, and still flushes + reports what it has.
-        entities = None
+        # read one at a time; a SIGINT finishes the CURRENT chunk,
+        # skips the rest, and still extracts + flushes what was read.
         if args.fixture_json is not None:
             grids = [
                 (int(p), int(t), g)
                 for p, t, g in json.loads(args.fixture_json.read_text())
             ]
             pages = sorted({p for p, _, _ in grids})
-            for chunk in chunked(pages, args.chunk_size):
-                if interrupted:
-                    break
-                chunk_grids = [g for g in grids if g[0] in set(chunk)]
-                raw = raw_from_cell_grids(spark, chunk_grids)
-                entities = _union_entities(entities, extract_all(raw))
+
+            def read_chunk(chunk: list[int]) -> DataFrame:
+                wanted = set(chunk)
+                return raw_from_cell_grids(spark, [g for g in grids if g[0] in wanted])
         else:
             total_pages = probe_page_count(str(args.pdf_path))
             pages = (
@@ -201,19 +200,27 @@ def main(argv: list[str] | None = None) -> int:
                 if args.pages is not None
                 else list(range(1, total_pages + 1))
             )
-            for chunk in chunked(pages, args.chunk_size):
-                if interrupted:
-                    break
-                raw = pdf_to_raw_tables(
+
+            def read_chunk(chunk: list[int]) -> DataFrame:
+                return pdf_to_raw_tables(
                     spark, str(args.pdf_path), chunk, args.chunk_size
                 )
-                entities = _union_entities(entities, extract_all(raw))
 
-        if entities is None:
-            # interrupted before the first chunk: still emit the
-            # header-only files (open-handles contract) and exit 1
-            raw = raw_from_cell_grids(spark, [])
-            entities = extract_all(raw)
+        chunks: list[DataFrame] = []
+        for chunk in chunked(pages, args.chunk_size):
+            if interrupted:
+                break
+            chunks.append(read_chunk(chunk))
+        # One extraction over every chunk read, so first-seen province
+        # dedup spans the run.  Interrupted before the first chunk:
+        # extract from no rows, which still emits the header-only files
+        # (open-handles contract) and exits 1.
+        raw = (
+            reduce(DataFrame.unionByName, chunks)
+            if chunks
+            else raw_from_cell_grids(spark, [])
+        )
+        entities = extract_all(raw)
         counts = write_all_entities(
             entities, args.destination, output_name, config,
             exact=not args.distributed,

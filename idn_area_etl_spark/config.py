@@ -2,8 +2,7 @@
 
 Mirrors the reference's config surface (config.py:13-144 +
 idnareaetl.toml): per-entity output headers, filename suffix, and
-flush batch size, loaded through a swappable ``FileLoader`` protocol
-(kept for test injection, mirroring tests/test_config.py:9-22).
+flush batch size.
 
 In the Spark engine ``batch_size`` has no buffering role (executors
 buffer writes natively); it is retained for config compatibility and
@@ -15,7 +14,7 @@ from __future__ import annotations
 import tomllib
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Literal, Protocol
+from typing import Literal
 
 Area = Literal["province", "regency", "district", "village", "island"]
 
@@ -71,19 +70,6 @@ class Config:
     data: dict[Area, DataConfig] = field(default_factory=dict)
 
 
-class FileLoader(Protocol):
-    def load(self, path: Path) -> dict: ...
-
-
-class TomlLoader:
-    def load(self, path: Path) -> dict:
-        try:
-            with open(path, "rb") as f:
-                return tomllib.load(f)
-        except (OSError, tomllib.TOMLDecodeError) as exc:
-            raise ConfigError(f"cannot load config {path}: {exc}") from exc
-
-
 def default_config() -> Config:
     return Config(
         data={
@@ -97,14 +83,18 @@ def default_config() -> Config:
     )
 
 
-def load_config(path: Path | None, loader: FileLoader | None = None) -> Config:
+def load_config(path: Path | None) -> Config:
     """Parse the TOML into per-entity DataConfigs; entities absent from
     the file keep their defaults (tolerates headers given as a
     comma-joined string, mirroring config.py:119-128)."""
     cfg = default_config()
     if path is None:
         return cfg
-    raw = (loader or TomlLoader()).load(Path(path))
+    try:
+        with open(path, "rb") as f:
+            raw = tomllib.load(f)
+    except (OSError, tomllib.TOMLDecodeError) as exc:
+        raise ConfigError(f"cannot load config {path}: {exc}") from exc
     for area, section in raw.get("data", {}).items():
         if area not in AREAS:
             raise ConfigError(f"unknown entity {area!r} in config")

@@ -105,10 +105,10 @@ def classify_codes(pairs: DataFrame) -> DataFrame:
 def extract_areas(routed: DataFrame) -> dict[str, DataFrame]:
     """Full area dataflow → four entity DataFrames.
 
-    The classified stream is split by four filters off one plan; the
-    caller should ``persist()`` upstream when materializing all four
-    (multi-sink fan-out, SURVEY.md §2.1 S6).  Province codes dedup
-    first-seen in document order (A1).
+    The classified stream is split by four filters off one plan.
+    Nothing persists it, so each of the four sinks recomputes the
+    classification from the routed rows (multi-sink fan-out, SURVEY.md
+    §2.1 S6).  Province codes dedup first-seen in document order (A1).
     """
     classified = classify_codes(code_name_pairs(routed))
     out: dict[str, DataFrame] = {}

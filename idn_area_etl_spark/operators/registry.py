@@ -152,8 +152,10 @@ def extract_all(raw: DataFrame) -> dict[str, DataFrame]:
 
     Returns the five entity DataFrames keyed 'province', 'regency',
     'district', 'village', 'island' (reference Area literal,
-    config.py:7).  The routed intermediate is cached by the caller if
-    multiple sinks follow (SURVEY.md §2.1 S6).
+    config.py:7).  The routed intermediate is neither cached nor
+    persisted: every sink that materializes an entity recomputes it
+    from the raw rows (SURVEY.md §2.1 S6; ``e2e_bench`` measures 14 raw
+    reads per raw row when the CLI writes all five entities).
     """
     from idn_area_etl_spark.operators.area import extract_areas
     from idn_area_etl_spark.operators.island import extract_islands

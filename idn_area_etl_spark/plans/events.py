@@ -70,9 +70,11 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     order_w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(order_w))
+    # exact microseconds: whole-second unix_timestamp would merge a
+    # 1800.05 s gap whose whole seconds differ by exactly 1800
+    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(order_w))
     new_session = F.when(
-        gap.isNull() | (gap > SESSION_GAP_SECONDS), F.lit(1)
+        gap.isNull() | (gap > SESSION_GAP_SECONDS * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     sessions = ev.withColumn(
         "session_no",

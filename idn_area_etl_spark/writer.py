@@ -39,7 +39,6 @@ def write_entity_csv_exact(
     df: DataFrame,
     path: Path | str,
     headers: list[str],
-    order: list[str] | None = None,
 ) -> int:
     """Write one golden-exact CSV; returns the data row count.
 
@@ -47,9 +46,7 @@ def write_entity_csv_exact(
     files, as asserted by the reference's tests
     (tests/test_extractors.py:735-744).
     """
-    order = ORDER_COLS if order is None else order
-    ordered = df.orderBy(*order) if order else df
-    out = _stringify(ordered, headers)
+    out = _stringify(df.orderBy(*ORDER_COLS), headers)
     n = 0
     with open(path, "w", newline="", encoding="utf-8", buffering=1048576) as fh:
         w = csv.writer(fh)
@@ -64,16 +61,15 @@ def write_entity_csv_distributed(
     df: DataFrame,
     path: Path | str,
     headers: list[str],
-    order: list[str] | None = None,
     max_records_per_file: int | None = None,
 ) -> None:
-    """Scale-mode CSV sink: parallel writers, optional within-partition
-    ordering (sortWithinPartitions keeps document order per file
-    without a global sort barrier)."""
-    order = ORDER_COLS if order is None else order
-    ordered = df.sortWithinPartitions(*order) if order else df
-    out = _stringify(ordered, headers)
-    writer = out.write.mode("overwrite").option("header", True)
+    """Scale-mode CSV sink: parallel writers, document order within each
+    file (sortWithinPartitions, without a global sort barrier)."""
+    out = _stringify(df.sortWithinPartitions(*ORDER_COLS), headers)
+    # RFC 4180 doubled quotes like the exact sink; Spark's default
+    # backslash escape reads back wrong in csv readers (coordinates
+    # carry '"' seconds marks)
+    writer = out.write.mode("overwrite").option("header", True).option("escape", '"')
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.csv(str(path))

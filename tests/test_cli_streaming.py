@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import csv
 import json
+from collections import Counter
 from pathlib import Path
 
 from idn_area_etl_spark.cli import build_parser, main, validate_args
@@ -18,6 +20,17 @@ AREA_GRID = [
     ["11.01.01", "1 Bakongan", "", "", "", "", ""],
 ]
 
+#: coordinates carry '"' seconds marks, which CSV sinks must quote
+ISLAND_GRID = [
+    ["Kode Pulau", "Nama Provinsi, Kabupaten/Kota, Pulau", "Jumlah",
+     "Koordinat", "Luas\n2\n(Km )", "BP/TBP", "Keterangan"],
+    ["11.01", "Kabupaten Aceh Selatan", "6", "", "", "", ""],
+    ["11.01.40001", "Pulau Batukapal", "", "03°19'03.44\" U 097°07'41.73\" T",
+     "0.0006", "TBP", ""],
+    ["11.06.40007", "Pulau Bateeleblah", "", "05°47'34.72\" U 094°58'26.09\" T",
+     "0.0080", "TBP", "(PPKT)"],
+]
+
 
 def test_page_range_helpers():
     assert validate_page_range("1-4,6")
@@ -27,7 +40,7 @@ def test_page_range_helpers():
     assert parse_page_range("2", 5) == [2]
 
 
-def test_cli_validation_failures(tmp_path: Path):
+def test_cli_validation_failures(tmp_path: Path, capsys):
     parser = build_parser()
     not_pdf = parser.parse_args([str(tmp_path / "x.txt")])
     assert "must be a .pdf" in validate_args(not_pdf)
@@ -42,6 +55,11 @@ def test_cli_validation_failures(tmp_path: Path):
     file_dest.write_text("x")
     bad_dest = parser.parse_args(["x.pdf", "-d", str(file_dest)])
     assert "not a directory" in validate_args(bad_dest)
+    for size in ("0", "-2"):
+        bad_chunk = parser.parse_args(["x.pdf", "-c", size])
+        assert "chunk size must be at least 1" in validate_args(bad_chunk)
+        assert main(["x.pdf", "-d", str(tmp_path), "-c", size]) == 1
+        assert "error: chunk size must be at least 1" in capsys.readouterr().err
 
 
 def test_cli_end_to_end_with_fixture(spark, tmp_path: Path):
@@ -55,6 +73,58 @@ def test_cli_end_to_end_with_fixture(spark, tmp_path: Path):
     assert rc == 0
     assert (dest / "doc.province.csv").read_bytes() == b"code,name\r\n11,Aceh\r\n"
     assert "11.01.01,11.01,Bakongan" in (dest / "doc.district.csv").read_text()
+
+
+def test_cli_output_does_not_depend_on_chunk_size(spark, tmp_path: Path):
+    """Province 11 restated on page 2 is written once whether the pages
+    are read as one chunk or two (reference keeps one seen-provinces
+    set per run, extractors.py:110-112); regencies are not deduped, so
+    each page keeps its regency row."""
+    fixture = tmp_path / "tables.json"
+    fixture.write_text(json.dumps([[1, 0, AREA_GRID], [2, 0, AREA_GRID]]))
+    written = {}
+    for size in ("1", "2"):
+        dest = tmp_path / f"c{size}"
+        rc = main([
+            "doc.pdf", "-d", str(dest), "-o", "doc", "-c", size,
+            "--fixture-json", str(fixture),
+        ])
+        assert rc == 0
+        written[size] = {f.name: f.read_bytes() for f in sorted(dest.iterdir())}
+    assert written["1"] == written["2"]
+    assert written["1"]["doc.province.csv"] == b"code,name\r\n11,Aceh\r\n"
+    regencies = written["1"]["doc.regency.csv"].decode().splitlines()[1:]
+    assert regencies == ["11.01,11,Kabupaten Aceh Selatan"] * 2
+
+
+def test_cli_distributed_matches_exact_rows(spark, tmp_path: Path):
+    """``--distributed`` writes one directory of part files per entity;
+    read back, their rows are the exact-mode CSV's rows."""
+    fixture = tmp_path / "tables.json"
+    fixture.write_text(json.dumps(
+        [[1, 0, AREA_GRID], [2, 0, AREA_GRID], [2, 1, ISLAND_GRID]]
+    ))
+    exact, dist = tmp_path / "exact", tmp_path / "dist"
+    for dest, extra in ((exact, []), (dist, ["--distributed"])):
+        rc = main([
+            "doc.pdf", "-d", str(dest), "-o", "doc",
+            "--fixture-json", str(fixture), *extra,
+        ])
+        assert rc == 0
+    exact_files = sorted(f.name for f in exact.iterdir())
+    assert sorted(f.name for f in dist.iterdir()) == exact_files
+    for name in exact_files:
+        with open(exact / name, newline="", encoding="utf-8") as fh:
+            header, *expected = list(csv.reader(fh))
+        parts = sorted((dist / name).glob("part-*.csv"))
+        assert parts, name
+        got = []
+        for part in parts:
+            with open(part, newline="", encoding="utf-8") as fh:
+                part_header, *rows = list(csv.reader(fh))
+            assert part_header == header, part
+            got += rows
+        assert Counter(map(tuple, got)) == Counter(map(tuple, expected)), name
 
 
 def test_cli_zero_rows_exits_1(spark, tmp_path: Path):
